@@ -11,13 +11,28 @@ Run from the root of a checkout.  One run:
 2. runs one cold pass (``cold_pass_s``: the first full-size pass, with
    codegen and JIT warm-up), then warm passes until ``--seconds`` have
    gone by, at least two (``pass_s`` = their median).  A pass runs each
-   call of the workload once, each into a noop sink;
+   call of the workload once, each into a noop sink.  Before every call
+   of a warm pass, untimed, it runs a fixed reference Spark job that
+   uses no pandance_spark code (``_reference``);
 3. reads ``peak_rss_mb``: the ``VmHWM`` of this process plus its JVM
    child.  The JVM heap is fixed at 1 GB (``-Xms`` = ``-Xmx``), so the
    figure is steady; heap pressure shows as GC time in the passes;
-4. checks every call's output of every pass against independent
+4. scales the three times (``setup_s``, ``cold_pass_s``, ``pass_s``)
+   to a reference host speed: each is multiplied by ``REF_S`` /
+   (median reference job time of the run).
+   The benchmark runs on a few cores of a shared host whose speed
+   drifts by tens of percent over minutes, and every call of a run
+   slows or speeds up with it; the reference job, sampled all through
+   the warm passes, measures that speed.  In three 10-run sets on a
+   4-vCPU box, the scaling cut the run-to-run spread (IQR / median) of
+   ``pass_s`` from 0.08-0.32 to 0.06-0.11 on paper_joins and from
+   0.11-0.18 to 0.05-0.06 on dedup_pipelines.  It does less for
+   ``cold_pass_s``, one pass early in the run, while the reference is
+   sampled later (0.10-0.31 raw, 0.07-0.16 scaled).  The raw times are
+   printed in the summary;
+5. checks every call's output of every pass against independent
    references (``oracles.py``); any failure makes the exit code 1;
-5. prints a summary with ``fail_frac`` (failed / attempted calls), then
+6. prints a summary with ``fail_frac`` (failed / attempted calls), then
    one JSON line with ``correct``, ``attempted``, ``failed`` and
    ``metrics``.
 
@@ -53,6 +68,12 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 SETUPS = 3
 MIN_WARM = 2
+# median time of the reference job on a 4-vCPU box, warm; the unit the
+# scaled times are expressed in
+REF_S = 0.17
+# untimed reference runs before the first sample: its own codegen and
+# JIT warm-up
+REF_WARMUP = 3
 
 
 def _parse(argv):
@@ -136,6 +157,33 @@ def _stop(spark) -> None:
                 time.sleep(0.05)
 
 
+def _reference(spark) -> float:
+    """Wall time of a fixed job on Spark alone: a 1M-row grouped
+    aggregate joined back to its keys, into a noop sink.  Like the
+    workloads' calls it is mostly planning, scheduling and small
+    shuffles, so it slows with the host the way they do; it reads no
+    input and calls no pandance_spark code, so a change to the program
+    does not move it."""
+    from pyspark.sql import functions as F
+
+    t = layers.now()
+    keys = spark.range(0, 997).withColumnRenamed("id", "k")
+    (
+        spark.range(0, 1_000_000, 1, 4)
+        .select(
+            (F.col("id") % 997).alias("k"),
+            F.xxhash64("id").bitwiseAND(0xFFFFFFF).alias("h"),
+        )
+        .groupBy("k")
+        .agg(F.sum("h").alias("s"))
+        .join(keys, "k")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return layers.now() - t
+
+
 class Runner:
     """Runs passes of one workload and keeps what they observed."""
 
@@ -148,6 +196,7 @@ class Runner:
         self.keep_rdds: set = set()
         self.observed = {c.key: [] for c in self.calls}  # per pass
         self.layer = {c.key: [] for c in self.calls}  # per traced pass
+        self.refs: list = []  # reference job times, warm passes
         self.attempted = 0
         self.passes = 0
         self.errors: dict = {}
@@ -176,14 +225,17 @@ class Runner:
         df.observe(obs, *cols).write.format("noop").mode("overwrite").save()
         return obs.get
 
-    def run_pass(self, label: str, traced: bool) -> float:
+    def run_pass(self, label: str, traced: bool, reference: bool = True) -> float:
         sc = self.spark.sparkContext
         # every pass starts from a collected heap
         sc._jvm.System.gc()
         pass_span = self.tracer.begin(label, None, traced=traced)
+        first_ref = len(self.refs)
         total = 0.0
         for call in self.calls:
             self._barrier()
+            if reference:
+                self.refs.append(_reference(self.spark))
             self.attempted += 1
             t0 = layers.now()
             if traced:
@@ -210,7 +262,7 @@ class Runner:
                 m.update(build_s=te - tb, exec_s=tx - te)
                 self.layer[call.key].append(m)
             total += layers.now() - t0
-        self.tracer.end(pass_span, pass_s=total)
+        self.tracer.end(pass_span, pass_s=total, reference_s=self.refs[first_ref:])
         self.passes += 1
         return total
 
@@ -276,12 +328,14 @@ def main(argv=None) -> int:
             t = layers.now()
             workload.make_inputs(spark)
             inputs_s.append(layers.now() - t)
-        setup_s = session_s + statistics.median(inputs_s)
+        setup_raw = session_s + statistics.median(inputs_s)
         tracer.record("setup", t0, layers.now(), None, session_s=session_s, inputs_s=inputs_s)
 
         runner = Runner(spark, workload, tracer)
         runner.pin_inputs()
-        cold = runner.run_pass("cold", traced=False)
+        cold = runner.run_pass("cold", traced=False, reference=False)
+        for _ in range(REF_WARMUP):
+            _reference(spark)
         warm = {False: [], True: []}
         start = time.time()
         i = 0
@@ -317,7 +371,9 @@ def main(argv=None) -> int:
         if spark is not None:
             _stop(spark)
 
-    pass_s = statistics.median(warm[False])
+    pass_raw = statistics.median(warm[False])
+    ref_s = statistics.median(runner.refs)
+    scale = REF_S / ref_s
     failed = len(failures)
     attempted = runner.attempted
     if args.trace:
@@ -330,14 +386,14 @@ def main(argv=None) -> int:
         metrics["setup.session_s"] = {"value": session_s, "unit": "s"}
         metrics["setup.inputs_s"] = {"value": statistics.median(inputs_s), "unit": "s"}
         metrics["trace.overhead_s"] = {
-            "value": statistics.median(warm[True]) - pass_s,
+            "value": statistics.median(warm[True]) - pass_raw,
             "unit": "s",
         }
     else:
         metrics = {
-            "setup_s": {"value": setup_s, "unit": "s"},
-            "cold_pass_s": {"value": cold, "unit": "s"},
-            "pass_s": {"value": pass_s, "unit": "s"},
+            "setup_s": {"value": setup_raw * scale, "unit": "s"},
+            "cold_pass_s": {"value": cold * scale, "unit": "s"},
+            "pass_s": {"value": pass_raw * scale, "unit": "s"},
             "peak_rss_mb": {"value": peak_rss_mb, "unit": "MB"},
         }
     tracer.write(
@@ -350,9 +406,16 @@ def main(argv=None) -> int:
     print(f"workload {workload.name}: {workload.why}")
     print(f"  seed {args.seed}; inputs {json.dumps(workload.sizes)}")
     print(
-        f"  setup_s {setup_s:.4f} s | cold_pass_s {cold:.4f} s | pass_s {pass_s:.4f} s "
-        f"(median of {len(warm[False])}) | peak_rss_mb {peak_rss_mb:.1f} MB | "
-        f"fail_frac {failed / attempted:.4f} ({failed}/{attempted})"
+        f"  setup_s {setup_raw * scale:.4f} s | cold_pass_s {cold * scale:.4f} s | "
+        f"pass_s {pass_raw * scale:.4f} s (median of {len(warm[False])}) | "
+        f"peak_rss_mb {peak_rss_mb:.1f} MB | fail_frac {failed / attempted:.4f} "
+        f"({failed}/{attempted})"
+    )
+    print(
+        f"  raw wall times: cold pass {cold:.4f} s, warm pass {pass_raw:.4f} s, "
+        f"setup {setup_raw:.4f} s; "
+        f"reference job {ref_s:.4f} s (median of {len(runner.refs)}), "
+        f"scale {scale:.4f}"
     )
     if args.trace:
         print(f"  tracing overhead {metrics['trace.overhead_s']['value']:+.4f} s per pass")

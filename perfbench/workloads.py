@@ -110,13 +110,16 @@ def _load(spark, path: str):
 
 def _documents(rng, n_docs: int, dup_frac: float = 0.05) -> list:
     """Token-id lists shaped like the reference corpus: 20-100 words
-    from a 30-word vocabulary, and ~5% near-duplicates (an earlier
+    from a 30-word vocabulary, and 5% near-duplicates (an earlier
     original plus the marker token).  The 20-word floor keeps every
-    near-dup pair's 3-shingle Jaccard >= 18/19."""
-    lengths = rng.integers(20, 101, n_docs)
+    near-dup pair's 3-shingle Jaccard >= 18/19.  The lengths cycle
+    through 20..100 and the near-dup count is exact, so every seed
+    gives the same amount of text; the seed draws the order, the
+    words and which documents repeat which."""
+    lengths = rng.permutation(np.resize(np.arange(20, 101), n_docs))
     docs = [rng.integers(0, len(VOCAB), n) for n in lengths]
-    is_dup = rng.random(n_docs) < dup_frac
-    is_dup[0] = False
+    is_dup = np.zeros(n_docs, dtype=bool)
+    is_dup[1 + rng.choice(n_docs - 1, round(dup_frac * n_docs), replace=False)] = True
     originals = []
     for i in range(n_docs):
         if is_dup[i]:
